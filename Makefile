@@ -2,12 +2,17 @@
 # (/root/reference/Makefile: build/test/lint/run/run-pg) for the PySpark
 # engine, plus the bench/oracle targets this repo's grading loop uses.
 
-.PHONY: test test-fast integration oracle bench plans run run-pg demo demo-feed image up down lint
+.PHONY: test test-slow test-fast integration oracle bench plans run run-pg demo demo-feed image up down lint
 
-# full suite (~10-13 min on local[32]); test-fast skips the streaming-
-# heavy files for a quick inner loop
+# default suite: pytest.ini deselects the tests marked `slow` (the long
+# e2e/boot/streaming/replay suites); test-slow runs only those, and
+# `python -m pytest tests/ -q -m ""` runs everything. test-fast also
+# skips the streaming-heavy files for a quick inner loop
 test:
 	python -m pytest tests/ -q
+
+test-slow:
+	python -m pytest tests/ -q -m slow
 
 test-fast:
 	python -m pytest tests/ -q \

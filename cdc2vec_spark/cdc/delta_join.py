@@ -46,10 +46,13 @@ surface per the BASELINE north star.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..parallel import run_concurrently
 from .apply import read_bucketed_state, swap_buckets
 from .envelope import OP_DELETE
 from .ivm import _read_epoch, _write_epoch
@@ -294,16 +297,7 @@ class IncrementalJoinView:
         if r_batch is not None:
             jobs.append((self.r_path, r_batch, self.r_key,
                          self.r_payload, r_touched))
-        if len(jobs) == 2:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [pool.submit(_side, *j) for j in jobs]
-                for f in futs:
-                    f.result()
-        else:
-            for j in jobs:
-                _side(*j)
+        run_concurrently(self.spark, *(partial(_side, *j) for j in jobs))
 
     def apply_batch(
         self,
@@ -376,13 +370,9 @@ class IncrementalJoinView:
         r_t: list[int] = []
         old_b: list[int] = []
         if l_batch is not None and r_batch is not None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                fl = pool.submit(_left)
-                fr = pool.submit(_right)
-                l_t, dirty_l, old_b, l_merged = fl.result()
-                r_t, dirty_r = fr.result()
+            (l_t, dirty_l, old_b, l_merged), (r_t, dirty_r) = run_concurrently(
+                spark, _left, _right
+            )
         elif l_batch is not None:
             l_t, dirty_l, old_b, l_merged = _left()
         elif r_batch is not None:
@@ -402,8 +392,6 @@ class IncrementalJoinView:
         # constraint, and swap_buckets_begin/commit keeps it race-free:
         # neither store's directories flip until BOTH staging jobs have
         # fully materialized (the r11 ask-#6 two-phase discipline).
-        from concurrent.futures import ThreadPoolExecutor
-
         from .apply import swap_buckets_begin, swap_buckets_commit
 
         fk_touched: list[int] = []
@@ -436,9 +424,7 @@ class IncrementalJoinView:
                 ).distinct().collect()
             )
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_new, f_rb = pool.submit(_new_b), pool.submit(_rb)
-            new_b, rb = f_new.result(), f_rb.result()
+        new_b, rb = run_concurrently(spark, _new_b, _rb)
 
         if dirty_l is not None:
             fk_touched = sorted(set(new_b) | set(old_b))
@@ -598,14 +584,7 @@ class IncrementalJoinView:
             if new_agg is not None:
                 swap_write_begin(new_agg, self.agg_path)
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(_begin_idx),
-                pool.submit(_begin_view),
-                pool.submit(_begin_agg),
-            ]
-            for f in futs:
-                f.result()
+        run_concurrently(spark, _begin_idx, _begin_view, _begin_agg)
         if idx is not None:
             swap_buckets_commit(self.fk_path, fk_touched, col=BUCKET)
         swap_buckets_commit(self.view_path, vb, col=BUCKET)

@@ -77,10 +77,12 @@ from __future__ import annotations
 
 import os
 from collections.abc import Sequence
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..parallel import run_concurrently
 from .apply import (
     BUCKET_COL,
     bucket_expr,
@@ -612,17 +614,13 @@ class IncrementalGroupAgg:
         # job → agg write job) with two overlapped jobs + the directory
         # flips; crash consistency is the same torn-epoch window, and
         # the rebuild path covers it.
-        from concurrent.futures import ThreadPoolExecutor
-
         from .apply import swap_buckets_begin, swap_buckets_commit
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fs = [
-                pool.submit(swap_write_begin, new_agg, self.agg_path),
-                pool.submit(swap_buckets_begin, merged, self.state_path),
-            ]
-            for f in fs:
-                f.result()
+        run_concurrently(
+            self.spark,
+            partial(swap_write_begin, new_agg, self.agg_path),
+            partial(swap_buckets_begin, merged, self.state_path),
+        )
         if mm:
             after.unpersist()
             if before is not None:
@@ -1054,25 +1052,21 @@ class IncrementalDistinctCount:
         # order had; the rebuild path covers it.
         epoch = _read_epoch(self._epoch_state) + 1
         _write_epoch(self._epoch_state, epoch)
-        from concurrent.futures import ThreadPoolExecutor
-
         from .apply import swap_buckets_begin, swap_buckets_commit
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            fs = [
-                pool.submit(swap_write_begin, new_agg, self.agg_path),
-                pool.submit(swap_buckets, merged, self.state_path, touched),
-            ]
-            if dtouched:
-                fs.append(
-                    pool.submit(
-                        swap_buckets_begin,
-                        new_dv.repartition(len(dtouched), DV_BUCKET),
-                        self.dv_path, DV_BUCKET,
-                    )
+        writes = [
+            partial(swap_write_begin, new_agg, self.agg_path),
+            partial(swap_buckets, merged, self.state_path, touched),
+        ]
+        if dtouched:
+            writes.append(
+                partial(
+                    swap_buckets_begin,
+                    new_dv.repartition(len(dtouched), DV_BUCKET),
+                    self.dv_path, DV_BUCKET,
                 )
-            for f in fs:
-                f.result()
+            )
+        run_concurrently(self.spark, *writes)
         merged.unpersist()
         if dtouched:
             swap_buckets_commit(self.dv_path, dtouched, DV_BUCKET)

@@ -35,6 +35,9 @@ from pyspark.sql import types as T
 
 from ..io import load_table
 
+# largest pca_train sample taken as a top-k without first counting rows
+_TOPK_DIRECT_MAX = 1 << 16
+
 
 def pca_train(
     embeddings: DataFrame,
@@ -54,13 +57,14 @@ def pca_train(
     Sign convention: each component's largest-|coefficient| entry is
     made non-negative — SVD sign is otherwise arbitrary and would break
     cross-run determinism."""
-    rows = (
-        embeddings.select(vec_col)
-        .where(F.col(vec_col).isNotNull())
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(sample_limit)
-        .collect()
-    )
+    src = embeddings.select(vec_col).where(F.col(vec_col).isNotNull())
+    if sample_limit > _TOPK_DIRECT_MAX:
+        # TakeOrderedAndProject allocates its top-k heap by the LIMIT,
+        # not by the input: a take-everything limit (10**9) asks for
+        # gigabytes on a few hundred rows and takes the JVM down. Past
+        # this size, one count job bounds the limit by the row count.
+        sample_limit = min(sample_limit, src.count())
+    rows = src.orderBy(F.xxhash64(F.col(id_col))).limit(sample_limit).collect()
     if not rows:
         raise ValueError("pca_train: no vectors to train on")
     x = np.asarray([r[0] for r in rows], dtype=np.float64)

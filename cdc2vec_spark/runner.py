@@ -18,9 +18,11 @@ main.go step → here:
 
 from __future__ import annotations
 
+import functools
 import os
+import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -28,6 +30,7 @@ from .cdc.envelope import OP_DELETE
 from .cdc.pipeline import run_batch
 from .config import DEFAULT_CONFIG, EngineConfig, PipelineConfig, load_yaml
 from .embed.provider import get_provider
+from .parallel import run_concurrently
 from .streaming.source import read_file_stream
 
 
@@ -710,30 +713,81 @@ def sink_hook_for(cfg: PipelineConfig, sink=None):
     return hook
 
 
-def sink_hooks_for(cfg: PipelineConfig):
+def sink_hooks_for(cfg: PipelineConfig) -> list:
     """Multi-sink fanout (engine extension; the reference's config.go
-    supports exactly one sink): one delivery hook per configured sink —
-    the primary ``sink:`` plus the ``sinks:`` list — composed into a
-    single per-batch hook. This is the production topology the two
+    supports exactly one sink): one ``(name, hook)`` delivery branch per
+    configured sink — the primary ``sink:`` plus the ``sinks:`` list, in
+    config order, named by sink type (a repeated type gets a ``_2``,
+    ``_3`` … suffix). This is the production topology the two
     incremental indexes imply: one CDC stream simultaneously maintains
     the external vector collection, the disk IVF index, and the lexical
-    BM25 index. boot() persists the batch's points before the fanout, so
-    the embed pipeline runs once regardless of sink count."""
-    hooks = [
-        h
-        for s in cfg.all_sinks
-        if (h := sink_hook_for(cfg, s)) is not None
+    BM25 index. ``fan_out`` applies a batch to the collection and every
+    branch concurrently over points persisted once, so the embed
+    pipeline runs once regardless of sink count and the batch costs its
+    slowest branch, not their sum; each branch's wall time is reported
+    per batch as ``/healthz`` ``branch_ms``."""
+    hooks: list = []
+    seen: dict[str, int] = {}
+    for s in cfg.all_sinks:
+        h = sink_hook_for(cfg, s)
+        if h is None:
+            continue
+        seen[s.type] = seen.get(s.type, 0) + 1
+        n = seen[s.type]
+        hooks.append((s.type if n == 1 else f"{s.type}_{n}", h))
+    return hooks
+
+
+def fan_out(pts: DataFrame, coll, hooks: list, epoch_id: int | None) -> dict:
+    """Apply one batch's points to the collection and every sink hook at
+    the same time, one thread per branch (``parallel.run_concurrently``,
+    so every branch's jobs keep the caller's job group and a streaming
+    ``query.stop()`` still cancels them). No branch reads another's
+    output, and every sink merges by max LSN, idempotent per epoch, so
+    the order in which branches apply a batch does not matter; a batch
+    that fails after some branches applied it is replayed whole.
+
+    With hooks, the points are persisted and counted in one job before
+    the branches start, so the embed pipeline runs once, not once per
+    branch, and every Observation inside the batch's plan (run_batch's
+    filter_observations) reports from that one complete scan instead of
+    from whichever concurrent branch finished first. They are
+    unpersisted only after EVERY branch has finished, also when one
+    fails — the first error is then raised. Without hooks, the count
+    rides the collection's own actions (an Observation read after its
+    ``apply_points``, whose touched-bucket collect is a full scan).
+    Returns ``{"points_out", "branch_ms"}``: the point count and each
+    branch's wall time, collection first, then hooks in config order."""
+    obs = n = None
+    if hooks:
+        pts = pts.persist()
+    else:
+        obs = Observation()
+        pts = pts.observe(obs, F.count(F.lit(1)).alias("points_out"))
+    branches = [
+        ("collection", functools.partial(coll.apply_points, pts, epoch_id)),
+        *((name, functools.partial(h, pts)) for name, h in hooks),
     ]
-    if not hooks:
-        return None
-    if len(hooks) == 1:
-        return hooks[0]
+    try:
+        if hooks:
+            n = pts.count()
+        ms = run_concurrently(
+            pts.sparkSession,
+            *(functools.partial(_wall_ms, fn) for _, fn in branches),
+        )
+    finally:
+        if hooks:
+            pts.unpersist()
+    return {
+        "points_out": n if obs is None else int(obs.get.get("points_out", 0)),
+        "branch_ms": {name: t for (name, _), t in zip(branches, ms)},
+    }
 
-    def fanout(pts: DataFrame) -> None:
-        for h in hooks:
-            h(pts)
 
-    return fanout
+def _wall_ms(fn) -> int:
+    t0 = time.perf_counter()
+    fn()
+    return round((time.perf_counter() - t0) * 1000)
 
 
 def _resolve_config(config: PipelineConfig | str | None):
@@ -805,7 +859,7 @@ def boot(
     cfg = _resolve_config(config)
     provider = _provider_from(cfg)
     coll = _collection_for(spark, cfg, state_dir)
-    hook = sink_hooks_for(cfg) if isinstance(cfg, PipelineConfig) else None
+    hooks = sink_hooks_for(cfg) if isinstance(cfg, PipelineConfig) else []
     # chunked + in-engine index sinks compose since round 8: the indexes
     # key tombstones on the base id (before '#'), giving replace-set
     # chunk semantics natively (ann_index/lex_index chunked=True —
@@ -820,10 +874,8 @@ def boot(
         for s in cfg.all_sinks
     )
 
-    # per-batch engine metrics for /healthz (points_out via Observation:
-    # the count piggybacks on the batch's own write actions — safe to
-    # read because every collection's apply_points starts with the
-    # touched-bucket collect, an action over the observed plan)
+    # per-batch engine metrics for /healthz: points_out and branch_ms
+    # come from fan_out
     batch_metrics: dict = {}
 
     cfg_path = config if isinstance(config, str) else None
@@ -850,34 +902,18 @@ def boot(
         return reload_state["engine"]
 
     def handle(batch: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
-        from pyspark.sql import Observation
-
-        t0 = _time.perf_counter()
+        t0 = time.perf_counter()
         fobs: list = []
         pts = run_batch(
             batch, _current_engine(), provider, keep_text=keep_text,
             filter_observations=fobs,
         )
-        obs = Observation()
-        pts = pts.observe(obs, F.count(F.lit(1)).alias("points_out"))
-        if hook is None:
-            coll.apply_points(pts, epoch_id)
-        else:
-            # the hook re-reads the batch's points: persist so the embed
-            # UDF pipeline runs once, not once per sink
-            pts = pts.persist()
-            try:
-                coll.apply_points(pts, epoch_id)
-                hook(pts)
-            finally:
-                pts.unpersist()
+        out = fan_out(pts, coll, hooks, epoch_id)
         batch_metrics.update(
             {
                 "epoch": epoch_id,
-                "points_out": int(obs.get.get("points_out", 0)),
-                "batch_wall_ms": round((_time.perf_counter() - t0) * 1000),
+                **out,
+                "batch_wall_ms": round((time.perf_counter() - t0) * 1000),
             }
         )
         if fobs:
@@ -938,7 +974,7 @@ def boot_with_snapshot(
     cfg = _resolve_config(config)
     provider = _provider_from(cfg)
     coll = _collection_for(spark, cfg, state_dir)
-    hook = sink_hooks_for(cfg) if isinstance(cfg, PipelineConfig) else None
+    hooks = sink_hooks_for(cfg) if isinstance(cfg, PipelineConfig) else []
     keep_text = isinstance(cfg, PipelineConfig) and any(
         s.type in ("lex_index", "group_agg", "distinct_agg", "neardup")
         for s in cfg.all_sinks
@@ -949,15 +985,7 @@ def boot_with_snapshot(
         pts = build_points(
             ev, mapping, provider, chunk=chunk, keep_text=keep_text
         )
-        if hook is None:
-            coll.apply_points(pts, None)
-            continue
-        pts = pts.persist()
-        try:
-            coll.apply_points(pts, None)
-            hook(pts)
-        finally:
-            pts.unpersist()
+        fan_out(pts, coll, hooks, None)
     return boot(
         spark,
         cfg,

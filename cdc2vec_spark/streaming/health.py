@@ -54,8 +54,10 @@ def serve_healthz(
 
     ``extra`` (engine extension): a callable returning additional payload
     fields — runner.boot passes its per-batch pipeline metrics (epoch,
-    points_out, batch_wall_ms) so operators see the engine-side batch
-    outcome next to Spark's own input counters."""
+    points_out, branch_ms — each fan-out branch's wall time, so the sink
+    that sets the batch's critical path is visible — and batch_wall_ms)
+    so operators see the engine-side batch outcome next to Spark's own
+    input counters."""
 
     class Handler(BaseHTTPRequestHandler):
         def do_GET(self):  # noqa: N802 (http.server API)
